@@ -74,6 +74,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from ripple_server_spark.sources import manifest
+
 TOPIC_SCHEMA_DDL = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string, seq long, bucket int"
@@ -106,28 +108,6 @@ class BucketPartition(InputPartition):
         self.topic = topic
 
 
-def _latest_version(root: str, topic: str) -> int | None:
-    """Latest committed manifest version, or None for manifest-less
-    legacy layouts — the ONE place manifest names are listed/parsed
-    (mirrors TopicStore._latest_version)."""
-    log_dir = os.path.join(root, "topics", topic, "_log")
-    manifests = (
-        sorted(n for n in os.listdir(log_dir) if n.endswith(".json"))
-        if os.path.isdir(log_dir)
-        else []
-    )
-    return int(manifests[-1][:-5]) if manifests else None
-
-
-def _load_manifest(root: str, topic: str, version: int) -> dict:
-    # ONE hardened loader for the whole engine (torn-read retry for the
-    # linkless-filesystem commit fallback) — lives with the commit
-    # protocol in datasink.py; readers delegate instead of re-parsing
-    from ripple_server_spark.sources.datasink import _load_manifest as _lm
-
-    return _lm(root, topic, version)
-
-
 def _bucket_files(
     root: str, topic: str, version: int | None = None
 ) -> list[tuple[int, list[str]]]:
@@ -136,41 +116,23 @@ def _bucket_files(
     same time-travel contract as TopicStore.read_topic, so a reader
     can replay exactly the snapshot a past consumer saw, across later
     compactions/retention). Snapshot-consistent either way:
-    crashed-produce orphans and mid-compaction files are invisible.
-    Falls back to directory listing for manifest-less legacy layouts."""
-    data_dir = os.path.join(root, "topics", topic, "data")
-    by_bucket: dict[int, list[str]] = {}
-    if version is None:
-        version = _latest_version(root, topic)
-    elif version != _latest_version(root, topic):
-        # pinned: verify it exists for a precise error (the latest
-        # version trivially exists)
-        try:
-            _load_manifest(root, topic, version)
-        except FileNotFoundError:
-            raise ValueError(
-                f"topic {topic!r} has no committed manifest version {version}"
-            ) from None
-    if version is not None:
-        return _files_from_manifest(root, topic, _load_manifest(root, topic, version))
-    else:
-        for e in sorted(os.listdir(data_dir)):
-            if e.startswith("bucket="):
-                b = int(e.split("=", 1)[1])
-                bdir = os.path.join(data_dir, e)
-                by_bucket[b] = [
-                    os.path.join(bdir, fn)
-                    for fn in sorted(os.listdir(bdir))
-                    if fn.endswith(".parquet")
-                ]
-    return sorted((b, sorted(fs)) for b, fs in by_bucket.items())
+    crashed-produce orphans and mid-compaction files are invisible."""
+    if version is None:  # unpinned: the latest snapshot
+        return _files_from_manifest(root, topic, manifest.latest(root, topic)[1])
+    try:
+        m = manifest.load(root, topic, version)
+    except FileNotFoundError:
+        raise ValueError(
+            f"topic {topic!r} has no committed manifest version {version}"
+        ) from None
+    return _files_from_manifest(root, topic, m)
 
 
 def _files_from_manifest(
     root: str, topic: str, m: dict
 ) -> list[tuple[int, list[str]]]:
     """Per-bucket absolute file paths from one parsed manifest dict."""
-    data_dir = os.path.join(root, "topics", topic, "data")
+    data_dir = manifest.data_dir(root, topic)
     by_bucket: dict[int, list[str]] = {}
     for rel in m["files"]:
         b = int(rel.split("/", 1)[0].split("=", 1)[1])
@@ -275,30 +237,21 @@ def _read_bucket_arrow(part: BucketPartition):
     yield from _topic_arrow_batches(tbl, part.bucket, part.topic)
 
 
-def _log_bounds(
-    root: str, topic: str
-) -> tuple[int | None, dict[str, int], dict[str, int]]:
-    """(version, {bucket: max seq}, {bucket: first retained seq}) from
-    the latest committed manifest — O(manifest bytes), never a data
-    scan, exactly the metadata TopicStore's cold path keeps to avoid
-    log scans. Manifest-less legacy layouts fall back to a footer scan
-    of the seq column (compat shim; real topics always have manifests).
-    """
-    version = _latest_version(root, topic)
-    if version is not None:
-        m = _load_manifest(root, topic, version)
-        maxima = {str(b): int(x) for b, x in m.get("maxima", {}).items()}
-        floors = {str(b): int(x) for b, x in m.get("floors", {}).items()}
-        return version, maxima, floors
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
+def _bounds(m: dict) -> tuple[dict[str, int], dict[str, int]]:
+    """({bucket: max seq}, {bucket: first retained seq}) of one parsed
+    manifest."""
+    return (
+        {str(b): int(x) for b, x in m.get("maxima", {}).items()},
+        {str(b): int(x) for b, x in m.get("floors", {}).items()},
+    )
 
-    maxima: dict[str, int] = {}
-    for b, files in _bucket_files(root, topic):
-        tbl = ds.dataset(files, format="parquet").to_table(columns=["seq"])
-        if tbl.num_rows:
-            maxima[str(b)] = pc.max(tbl.column("seq")).as_py()
-    return None, maxima, {}
+
+def _log_bounds(root: str, topic: str) -> tuple[int, dict[str, int], dict[str, int]]:
+    """(version, maxima, floors) of the latest committed manifest —
+    O(manifest bytes), never a data scan, exactly the metadata
+    TopicStore's cold path keeps to avoid log scans."""
+    version, m = manifest.latest(root, topic)
+    return (version, *_bounds(m))
 
 
 def _latest_cursors(root: str, topic: str) -> dict[str, int]:
@@ -350,21 +303,8 @@ def _initial_cursors(root: str, topic: str, start_at: str) -> dict[str, int]:
     if start_at.startswith("timestamp:"):
         return _timestamp_cursors(root, topic, int(start_at.split(":", 1)[1]))
     if start_at.startswith("consumer:"):
-        consumer_id = start_at.split(":", 1)[1]
-        path = os.path.join(root, "offsets", f"{consumer_id}--{topic}.json")
-        if not os.path.isfile(path):
-            return {}
-        with open(path) as f:
-            doc = json.load(f)
-        # one shared normalizer for wrapped (r11+, generation-stamped)
-        # and legacy flat offsets documents — lazy import keeps this
-        # module's import graph light for executor workers
-        from ripple_server_spark.sources.topics import normalize_offsets_doc
-
-        return {
-            str(b): int(v)
-            for b, v in normalize_offsets_doc(doc)["offsets"].items()
-        }
+        doc = manifest.read_offsets_doc(root, start_at.split(":", 1)[1], topic)
+        return {str(b): int(v) for b, v in doc["offsets"].items()}
     return {}
 
 
@@ -388,9 +328,9 @@ def _timestamp_cursors(root: str, topic: str, epoch_ms: int) -> dict[str, int]:
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    _, maxima, _ = _log_bounds(root, topic)
-    cursors = {b: mx + 1 for b, mx in maxima.items()}  # default: tail
-    for b, files in _bucket_files(root, topic):
+    m = manifest.latest(root, topic)[1]
+    cursors = {b: mx + 1 for b, mx in _bounds(m)[0].items()}  # default: tail
+    for b, files in _files_from_manifest(root, topic, m):
         lo: int | None = None
         # PER-FILE scalars: a topic upgraded across round 9 holds both
         # INT96 files (pyarrow: naive timestamp[ns]) and MICROS files
@@ -456,19 +396,16 @@ def _check_start_at(start_at: str) -> str:
 
 
 def _topic_ready(root: str, topic: str) -> bool:
-    """A topic is admissible once its on-disk layout is complete: a
-    committed manifest, or (legacy manifest-less) a data dir.
+    """A topic is admissible once its manifest v1 is committed.
     create_topic makes the topic dir, data/ and manifest v1 in
     separate syscalls, so a concurrent directory listing can see the
     bare directory mid-create — admitting it then would crash on the
     missing pieces; skipping it (query-start resolution) or waiting
     one trigger (discovery) is the correct race outcome (review r09)."""
     try:
-        if _latest_version(root, topic) is not None:
-            return True  # committed manifest: layout complete
-    except OSError:
-        pass
-    return os.path.isdir(os.path.join(root, "topics", topic, "data"))
+        return bool(manifest.versions(root, topic))
+    except FileNotFoundError:
+        return False
 
 
 def _topics_list(options: dict) -> list[str]:
@@ -593,9 +530,7 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
         # decoded-tail cache for the driver prefetch, see _tail_slice
         self._tail_cache: dict[int, tuple] = {}
 
-    def _tail_slice(
-        self, version: int | None, bucket: int, files, off: int, max_rows
-    ):
+    def _tail_slice(self, version: int, bucket: int, files, off: int, max_rows):
         """Seq-sorted Arrow slice [off, off + max_rows-by-count) of one
         bucket, from a per-(bucket, manifest-version) DECODED tail
         cache; ``None`` when the bucket is drained past ``off``.
@@ -657,8 +592,8 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
         # snapshot; the version rides in the end offset so crash
         # recovery can replay the exact file set this batch saw (see
         # readBetweenOffsets).
-        version = _latest_version(self.root, self.topic)
-        for b, files in _bucket_files(self.root, self.topic, version):
+        version, m = manifest.latest(self.root, self.topic)
+        for b, files in _files_from_manifest(self.root, self.topic, m):
             off = int(cursors.get(str(b), 0))
             got = self._tail_slice(version, b, files, off, max_rows)
             if got is not None and got.num_rows:
@@ -669,9 +604,11 @@ class RippleTopicStreamReader(SimpleDataSourceStreamReader):
                 # and a count-based cursor would lag and re-deliver the
                 # tail forever. The slice is seq-sorted, so max = last.
                 new_cursors[str(b)] = got.column("seq")[-1].as_py() + 1
-        end = {"cursors": json.dumps(new_cursors), "topic": self.topic}
-        if version is not None:
-            end["version"] = str(version)
+        end = {
+            "cursors": json.dumps(new_cursors),
+            "topic": self.topic,
+            "version": str(version),
+        }
         return slices, end
 
     def read(self, start: dict):
@@ -800,73 +737,60 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
         # manifest (file list included) twice per trigger
         # (latestOffset + partitions). Version-stamped, so a commit
         # invalidates naturally; the files cache keeps the last few
-        # versions because crash replay pins an older one. Legacy
-        # manifest-less layouts (version None) are never cached — the
-        # directory can change without a version bump.
+        # versions because crash replay pins an older one.
         self._bounds_cache: tuple[int, dict[str, int], dict[str, int]] | None = None
         self._files_cache: dict[int, list[tuple[int, list[str]]]] = {}
 
     def _cached_log_bounds(self):
-        version = _latest_version(self.root, self.topic)
-        if version is None:
-            return _log_bounds(self.root, self.topic)  # legacy: never cache
+        version = manifest.latest_version(self.root, self.topic)
         if self._bounds_cache is not None and self._bounds_cache[0] == version:
             return self._bounds_cache
         # ONE manifest parse primes both caches (bounds for admission,
         # file lists for the partitions() call of the same trigger)
-        m = _load_manifest(self.root, self.topic, version)
-        self._bounds_cache = (
-            version,
-            {str(b): int(x) for b, x in m.get("maxima", {}).items()},
-            {str(b): int(x) for b, x in m.get("floors", {}).items()},
-        )
+        m = manifest.load(self.root, self.topic, version)
+        self._bounds_cache = (version, *_bounds(m))
         self._files_cache[version] = _files_from_manifest(self.root, self.topic, m)
         self._trim_files_cache()
         return self._bounds_cache
 
-    def _cached_bucket_files(self, version: int | None):
-        if version is None:
-            return _bucket_files(self.root, self.topic)
+    def _cached_bucket_files(self, version: int):
         hit = self._files_cache.get(version)
-        if hit is not None:
-            return hit
-        files = _bucket_files(self.root, self.topic, version)
-        self._files_cache[version] = files
-        self._trim_files_cache()
-        return files
+        if hit is None:
+            hit = _bucket_files(self.root, self.topic, version)
+            self._files_cache[version] = hit
+            self._trim_files_cache()
+        return hit
 
-    def _version_floors(self, version: int | None) -> dict[str, int]:
+    def _version_floors(self, version: int) -> dict[str, int]:
         """Per-bucket retained floors of a pinned manifest version (the
         snapshot partitions() plans against), used to clamp catch-up
-        chunking — {} for legacy manifest-less layouts."""
-        if version is None:
-            return {}
+        chunking — {} once that version was vacuumed away."""
         if self._bounds_cache is not None and self._bounds_cache[0] == version:
             return self._bounds_cache[2]
         try:
-            m = _load_manifest(self.root, self.topic, version)
+            m = manifest.load(self.root, self.topic, version)
         except FileNotFoundError:
             return {}
-        return {str(b): int(x) for b, x in m.get("floors", {}).items()}
+        return _bounds(m)[1]
 
     def _trim_files_cache(self) -> None:
         while len(self._files_cache) > 4:  # replay keeps a pinned version warm
             self._files_cache.pop(next(iter(self._files_cache)))
 
-    def _pack(self, cursors: dict[str, int], version: int | None) -> dict:
+    def _pack(self, cursors: dict[str, int], **pin: str) -> dict:
         # "topic" rides in the offset so consumers of the checkpoint
         # (streaming.api.commit_stream_position) can verify WHICH topic
         # a single-source checkpoint tracked — cursors alone pass the
         # range/HWM validation for any topic of compatible shape, which
         # would silently commit wrong consumer offsets. partitions()/
         # commit() ignore the extra key, so old checkpoints replay fine.
-        off = {
+        # ``pin`` carries the manifest version an END offset was planned
+        # against; the initial offset pins none.
+        return {
             "cursors": json.dumps(cursors, sort_keys=True),
             "topic": self.topic,
+            **pin,
         }
-        if version is not None:
-            off["version"] = str(version)
-        return off
 
     def _note(self, cursors: dict[str, int]) -> None:
         """Advance the admission anchor (cursors only ever rise; a
@@ -880,7 +804,7 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         cursors = _initial_cursors(self.root, self.topic, self.start_at)
         self._note(cursors)
-        return self._pack(cursors, None)
+        return self._pack(cursors)
 
     def latestOffset(self) -> dict:
         version, maxima, floors = self._cached_log_bounds()
@@ -905,12 +829,15 @@ class RippleTopicPartitionedStreamReader(DataSourceStreamReader):
             eff = max(lb, floors.get(b, 0))  # skip the retention hole
             cursors[b] = max(lb, min(hwm, eff + self.batch_size))
         self._note(cursors)
-        return self._pack(cursors, version)
+        return self._pack(cursors, version=str(version))
 
     def partitions(self, start: dict, end: dict) -> list[BucketPartition]:
         s = json.loads(start.get("cursors", "{}"))
         e = json.loads(end.get("cursors", "{}"))
-        version = int(end["version"]) if "version" in end else None
+        # an end offset without a pinned version plans against the latest
+        version = int(
+            end.get("version") or manifest.latest_version(self.root, self.topic)
+        )
         try:
             buckets = self._cached_bucket_files(version)
         except ValueError:

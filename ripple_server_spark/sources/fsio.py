@@ -18,11 +18,12 @@ this environment is offline — the seam is the contract, the POSIX
 class the reference implementation.
 
 Scope is deliberately the DATA plane only. The manifest COMMIT
-protocol (atomic ``os.link`` / ``O_CREAT|O_EXCL`` slot claims,
-datasink._claim_version_slot) is a different contract — it needs an
-atomic create-if-absent primitive, which object stores express
-differently (e.g. S3 conditional PUT) — and stays where it lives;
-SCALE.md documents both contracts side by side.
+protocol (the atomic version-slot claim in ``sources/manifest.py``,
+the one module that knows the manifest log) is a different contract —
+it needs an atomic create-if-absent primitive, which object stores
+express differently (e.g. S3 conditional PUT) — so a port replaces
+``manifest.claim``, not this seam; SCALE.md documents both contracts
+side by side.
 
 Kernels capture ``DATA_FS`` via this importable module, so executor
 workers resolve the deployment's instance at unpickle time (functions

@@ -39,6 +39,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ripple_server_spark.sources import manifest
 from ripple_server_spark.sources.topics import TopicStore
 
 HOUR_FMT = "yyyy-MM-dd-HH"
@@ -75,11 +76,11 @@ class HourlyRollup:
         # high-water mark: taking maxima from a separate (possibly
         # newer) read would advance the HWM past rows a concurrent
         # produce landed AFTER our snapshot — silently never folded.
-        v, manifest = self.store.latest_manifest(self.topic)
+        v, snapshot = self.store.latest_manifest(self.topic)
         log = self.store.read_topic(self.topic, version=v)
         hwm, seen_restore = self._load_state()
         maxima = {
-            int(b): x for b, x in manifest.get("maxima", {}).items()
+            int(b): x for b, x in snapshot.get("maxima", {}).items()
         }
         # A restore between refreshes rewinds the seq high-water marks,
         # so "seq > hwm" no longer means "new" (reused seqs would be
@@ -91,7 +92,7 @@ class HourlyRollup:
         # restored log, and an hour whose rows were entirely rolled
         # back would otherwise keep serving rolled-back aggregates
         # forever.
-        restored = bool(hwm) and manifest.get("restored_from") != seen_restore
+        restored = bool(hwm) and snapshot.get("restored_from") != seen_restore
         if restored:
             hwm = {}
             shutil.rmtree(os.path.join(self.dest, "data"), ignore_errors=True)
@@ -100,13 +101,13 @@ class HourlyRollup:
             # crash anywhere in the rebuild re-detects the restore and
             # rebuilds again
 
-        if not manifest.get("files"):
+        if not snapshot.get("files"):
             # nothing retained (never produced, or restored/truncated to
             # empty): there are no event columns to aggregate — and after
             # a restore-to-empty the cleared table must STAY empty, with
             # the marker committed so later refreshes don't re-detect it
             if restored:
-                self._write_state(maxima, manifest)
+                self._write_state(maxima, snapshot)
             return {"hours_refreshed": 0, "new_rows": 0}
 
         hour_key = F.date_format("ts", HOUR_FMT).alias("hour_key")
@@ -172,12 +173,12 @@ class HourlyRollup:
                 # restored-to-empty: the table was cleared above and
                 # stays empty; commit the new marker so later refreshes
                 # don't re-detect the same restore
-                self._write_state(maxima, manifest)
+                self._write_state(maxima, snapshot)
             return {"hours_refreshed": 0, "new_rows": 0}
         # State commits AFTER the data write: a crash in between replays
         # the same hours idempotently on the next refresh. The restore
         # marker rides along so the next refresh can detect a rollback.
-        self._write_state(maxima, manifest)
+        self._write_state(maxima, snapshot)
         return {"hours_refreshed": len(hours), "new_rows": n_new}
 
     def _write_hours(self, rolled: DataFrame) -> list[tuple[str, int]]:
@@ -266,21 +267,16 @@ class HourlyRollup:
             .collect()
         ]
 
-    def _write_state(self, maxima: dict, manifest: dict) -> None:
-        # atomic (tmp + rename, same discipline as TopicStore._write_json):
-        # a crash mid-dump must leave the previous state readable, not a
-        # truncated JSON that breaks every later refresh
-        path = self._state_path()
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "hwm": {str(b): m for b, m in maxima.items()},
-                    "restore": manifest.get("restored_from"),
-                },
-                f,
-            )
-        os.replace(tmp, path)
+    def _write_state(self, maxima: dict, snapshot: dict) -> None:
+        # atomic: a crash mid-dump must leave the previous state
+        # readable, not a truncated JSON that breaks every later refresh
+        manifest.write_json(
+            self._state_path(),
+            {
+                "hwm": {str(b): m for b, m in maxima.items()},
+                "restore": snapshot.get("restored_from"),
+            },
+        )
 
     # partition column (hour_key) LAST — the order spark.read.parquet
     # yields for a partitioned table, so the empty frame's schema equals

@@ -31,10 +31,8 @@ per-bucket maxima of existing data (column-pruned parquet footer scan).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import tempfile
 import threading
 import time
 import uuid
@@ -46,21 +44,7 @@ from pyspark.sql import functions as F
 
 from ripple_server_spark.config import APPLIED_IDS_KEEP, N_BUCKETS
 from ripple_server_spark.operators.relational import bucket_of
-
-
-def normalize_offsets_doc(doc: dict) -> dict:
-    """One normalizer for BOTH offsets-file formats — the r11+ wrapped
-    document ``{"offsets": {b: o}, "generations": {b: g}}`` and the
-    legacy flat ``{b: o}`` map — shared by every reader (TopicStore
-    and the ``ripple_topic`` source's ``start_at=consumer:`` cursor
-    load), so a future format change cannot silently diverge between
-    the batch and streaming paths (review r11)."""
-    if "offsets" in doc and isinstance(doc.get("offsets"), dict):
-        return {
-            "offsets": dict(doc["offsets"]),
-            "generations": dict(doc.get("generations", {})),
-        }
-    return {"offsets": dict(doc), "generations": {}}
+from ripple_server_spark.sources import manifest
 
 
 class StaleGenerationError(RuntimeError):
@@ -377,11 +361,13 @@ class TopicStore:
           topics/<topic>/data/bucket=<n>/      # parquet event log (append-only)
           offsets/<consumer_id>--<topic>.json  # committed per-bucket offsets
 
-    Commit protocol (Delta-/Iceberg-style, sized for a filesystem):
-    every mutation (produce / compact / truncate) stages its parquet
-    files under unique names, then writes manifest version v+1 with
-    ``O_CREAT|O_EXCL`` — the atomic rename-free commit point. A
-    manifest is a FULL snapshot: the live file list plus the state that
+    Commit protocol (Delta-/Iceberg-style, sized for a filesystem;
+    implemented once in ``sources/manifest.py``): every mutation
+    (produce / compact / truncate) stages its parquet files under
+    unique names, then atomically claims manifest version v+1 — the
+    name appears with its bytes complete, and only if no other writer
+    claimed it first; that claim is the commit point. A manifest is a
+    FULL snapshot: the live file list plus the state that
     must commit atomically with it (``applied_batches`` for idempotent
     produce, per-bucket ``maxima``/``floors`` so cold opens never scan
     the log). Consequences:
@@ -394,10 +380,10 @@ class TopicStore:
       manifest and read exactly its files; compaction commits a new
       file set without touching the old one, so in-flight readers never
       hit FileNotFound (old files are deleted only by vacuum).
-    - **writer-conflict detection**: O_EXCL on v+1 makes a lost-update
-      race a visible failure; the losing writer rebases (re-applies its
-      file edits to the new base) and retries — optimistic concurrency
-      instead of silent corruption. Per-bucket seq assignment still
+    - **writer-conflict detection**: the atomic claim of v+1 makes a
+      lost-update race a visible failure; the losing writer rebases
+      (re-applies its file edits to the new base) and retries —
+      optimistic concurrency instead of silent corruption. Per-bucket seq assignment still
       assumes one producer per topic (the reference's model).
 
     The directory-tailing streaming source (``streaming/api.py
@@ -427,68 +413,21 @@ class TopicStore:
 
     # -- paths -------------------------------------------------------------
     def topic_dir(self, topic: str) -> str:
-        return os.path.join(self.root, "topics", topic)
+        return manifest.topic_dir(self.root, topic)
 
     def data_dir(self, topic: str) -> str:
-        return os.path.join(self.topic_dir(topic), "data")
+        return manifest.data_dir(self.root, topic)
 
-    def _log_dir(self, topic: str) -> str:
-        return os.path.join(self.topic_dir(topic), "_log")
-
-    def _offsets_path(self, consumer_id: str, topic: str) -> str:
-        return os.path.join(self.root, "offsets", f"{consumer_id}--{topic}.json")
-
-    # -- manifest log ------------------------------------------------------
-    def _manifest_path(self, topic: str, version: int) -> str:
-        return os.path.join(self._log_dir(topic), f"{version:020d}.json")
-
+    # -- manifest log (sources/manifest.py, bound to this root) -------------
     def _latest_version(self, topic: str) -> int:
-        """Newest committed manifest version — one directory listing,
-        no file reads (the cheap cache-freshness probe)."""
-        log = self._log_dir(topic)
-        names = [n for n in os.listdir(log) if n.endswith(".json")]
-        if not names:
-            raise FileNotFoundError(f"topic {topic!r} has no manifest")
-        return max(int(n[:-5]) for n in names)
+        return manifest.latest_version(self.root, topic)
 
     def latest_manifest(self, topic: str) -> tuple[int, dict]:
-        """(version, manifest) of the newest committed manifest (shared
-        torn-read-hardened loader, datasink._load_manifest)."""
-        from ripple_server_spark.sources.datasink import _load_manifest
+        """(version, manifest) of the newest committed manifest."""
+        return manifest.latest(self.root, topic)
 
-        v = self._latest_version(topic)
-        return v, _load_manifest(self.root, topic, v)
-
-    def _commit(self, topic: str, base_version: int, apply, retries: int = 200) -> dict:
-        """Optimistic-concurrency commit: ``apply(manifest) -> manifest``
-        transforms the base snapshot; an atomic claim of the version+1
-        slot is the commit point. On collision the edit is re-applied to
-        the newer base and retried (apply must be a self-contained
-        rebase: add these files / drop those files / swap this subset).
-
-        The slot claim writes content to a tmp file and publishes it
-        with ``os.link`` (datasink._claim_version_slot) — atomic like
-        O_CREAT|O_EXCL, but the bytes are complete before the name
-        appears, so a concurrent reader (e.g. a native-sink write TASK,
-        which is its own producer) can never torn-read a manifest."""
-        from ripple_server_spark.sources.datasink import _claim_version_slot
-
-        v = base_version
-        for _ in range(retries):
-            try:
-                with open(self._manifest_path(topic, v)) as f:
-                    base = json.load(f)
-            except FileNotFoundError:
-                # base manifest vacuumed away mid-commit: a newer
-                # version exists by definition, so rebase onto latest
-                # (apply is a self-contained edit).
-                v, base = self.latest_manifest(topic)
-            new = apply(dict(base))
-            new["version"] = v + 1
-            if _claim_version_slot(self._manifest_path(topic, v + 1), new):
-                return new
-            v = self._latest_version(topic)
-        raise RuntimeError(f"manifest commit contention on topic {topic!r}")
+    def _commit(self, topic: str, base_version: int, apply) -> dict:
+        return manifest.commit(self.root, topic, base_version, apply)
 
     def _move_staged(self, topic: str, staging: str) -> list[str]:
         """Move staged parquet out of a Spark output dir into the live
@@ -535,8 +474,9 @@ class TopicStore:
 
     def vacuum(self, topic: str, grace_s: float = 0.0) -> int:
         """Delete data files no manifest-latest references (compacted-
-        away segments, truncated segments, crashed-produce orphans) and
-        all but the newest manifest. Returns files removed.
+        away segments, truncated segments, crashed-produce orphans), all
+        but the newest manifest, and the tmp files of killed manifest
+        claims. Returns data files removed.
 
         ``grace_s`` spares files modified within the last N seconds:
         a concurrent produce moves staged files into ``data/`` BEFORE
@@ -565,17 +505,7 @@ class TopicStore:
                 ):
                     os.remove(p)
                     removed += 1
-        for n in os.listdir(self._log_dir(topic)):
-            p = os.path.join(self._log_dir(topic), n)
-            # grace applies to manifests too: an in-flight commit may
-            # still re-read its base version, and a pinned snapshot
-            # reader its pinned version
-            if (
-                n.endswith(".json")
-                and int(n[:-5]) < v
-                and os.path.getmtime(p) <= cutoff
-            ):
-                os.remove(p)
+        manifest.prune(self.root, topic, v, cutoff)
         return removed
 
     # -- DDL (CreateBucket analog) ----------------------------------------
@@ -607,25 +537,7 @@ class TopicStore:
         n_buckets: int = N_BUCKETS,
         config: dict | None = None,
     ) -> None:
-        from ripple_server_spark.sources.datasink import validate_topic_name
-
-        validate_topic_name(topic)
-        os.makedirs(self.data_dir(topic), exist_ok=True)
-        os.makedirs(self._log_dir(topic), exist_ok=True)
-        if not os.listdir(self._log_dir(topic)):
-            self._write_json(
-                self._manifest_path(topic, 1),
-                {
-                    "version": 1,
-                    "topic": topic,
-                    "n_buckets": n_buckets,
-                    "files": [],
-                    "applied_batches": [],
-                    "maxima": {},
-                    "floors": {},
-                    "config": dict(config or {}),
-                },
-            )
+        manifest.create(self.root, topic, n_buckets, config)
 
     def topic_config(self, topic: str) -> dict:
         """The topic's config map (Kafka ``describe --topic`` configs);
@@ -795,13 +707,11 @@ class TopicStore:
         r11): without it, ``delete_topic("..")`` resolved topic_dir to
         the topics ROOT and rmtree'd the entire store, and path-segment
         names like ``a/b`` escaped the layout."""
-        from ripple_server_spark.sources.datasink import validate_topic_name
-
-        validate_topic_name(topic)
+        manifest.validate_topic_name(topic)
         tdir = self.topic_dir(topic)
         if not os.path.isdir(tdir):
             raise FileNotFoundError(f"topic {topic!r} does not exist")
-        shutil.rmtree(self._log_dir(topic), ignore_errors=True)
+        shutil.rmtree(manifest.log_dir(self.root, topic), ignore_errors=True)
         shutil.rmtree(tdir, ignore_errors=True)
         self._maxima.pop(topic, None)
         self._floors.pop(topic, None)
@@ -1050,11 +960,9 @@ class TopicStore:
             # the empty-batch early return above guarantees staged files
             # exist here, so the batch schema always lands on disk.
             # ONE schema-merge policy for both producers of this
-            # manifest (the sink's helper): a drift between the two
-            # paths silently de-synchronizes the evolution flag
-            from ripple_server_spark.sources.datasink import _merge_schema
-
-            _merge_schema(m, fields)
+            # manifest: a drift between produce and the sink would
+            # silently de-synchronize the evolution flag
+            manifest.merge_schema(m, fields)
             if batch_id is not None:
                 # retention MUST match the native sink's window
                 # (config.APPLIED_IDS_KEEP): a shorter truncation here
@@ -1152,8 +1060,7 @@ class TopicStore:
         if version is None:
             _v, m = self.latest_manifest(topic)
         else:
-            with open(self._manifest_path(topic, version)) as f:
-                m = json.load(f)
+            m = manifest.load(self.root, topic, version)
         if not m["files"]:
             # An empty topic is a legitimate broker state (a consumer
             # may subscribe before any producer publishes; retention
@@ -1223,8 +1130,7 @@ class TopicStore:
             base_v, base = self.latest_manifest(topic)
         else:
             base_v = base_version
-            with open(self._manifest_path(topic, base_v)) as f:
-                base = json.load(f)
+            base = manifest.load(self.root, topic, base_v)
 
         class _InputSuperseded(Exception):
             """A concurrent commit removed one of this compaction's
@@ -1423,8 +1329,7 @@ class TopicStore:
             base_v, base = self.latest_manifest(topic)
         else:
             base_v = base_version
-            with open(self._manifest_path(topic, base_v)) as f:
-                base = json.load(f)
+            base = manifest.load(self.root, topic, base_v)
 
         class _InputSuperseded(Exception):
             pass
@@ -1726,20 +1631,12 @@ class TopicStore:
     def register_consumer(self, consumer_id: str, topic: str) -> None:
         """First-contact registration: offsets start at 0 for every
         bucket (reference: ZK /consumers/<id> = "0", core.go:77-85)."""
-        path = self._offsets_path(consumer_id, topic)
+        path = manifest.offsets_path(self.root, consumer_id, topic)
         if not os.path.exists(path):
-            self._write_json(path, {})
+            manifest.write_json(path, {})
 
     def _read_offsets_doc(self, consumer_id: str, topic: str) -> dict:
-        """Raw offsets document: ``{"offsets": {b: o}, "generations":
-        {b: g}}``. Legacy flat ``{b: o}`` files (written before fenced
-        commits stamped generations) are normalized on read."""
-        path = self._offsets_path(consumer_id, topic)
-        if not os.path.exists(path):
-            return {"offsets": {}, "generations": {}}
-        with open(path) as f:
-            doc = json.load(f)
-        return normalize_offsets_doc(doc)
+        return manifest.read_offsets_doc(self.root, consumer_id, topic)
 
     def committed_offsets(self, consumer_id: str, topic: str) -> dict[int, int]:
         return {
@@ -1990,7 +1887,7 @@ class TopicStore:
         group's generation lives in the topic manifest and is bumped
         exactly when ``n_members`` changes — a rebalance is a state
         change, so it is a (metadata-only) manifest commit, and the
-        O_EXCL version claim serializes concurrent rebalances. Calling
+        atomic version claim serializes concurrent rebalances. Calling
         with the CURRENT n_members never bumps (idempotent: every
         member of one generation converges on one epoch with no
         coordination). Fenced commits — :meth:`commit` with
@@ -2355,15 +2252,15 @@ class TopicStore:
             doc["offsets"][str(b)] = o
             if generation is not None:
                 doc["generations"][str(b)] = int(generation)
-        path = self._offsets_path(consumer_id, topic)
-        self._write_json(path, doc)
+        path = manifest.offsets_path(self.root, consumer_id, topic)
+        manifest.write_json(path, doc)
         if group_id is not None:
             try:
                 self._fence_group_commit_many(
                     topic, group_id, generation, consumer_id, list(offsets)
                 )
             except StaleGenerationError:
-                self._write_json(path, prior)  # roll the whole set back
+                manifest.write_json(path, prior)  # roll the whole set back
                 raise
 
     def read_increment(
@@ -2403,13 +2300,11 @@ class TopicStore:
         stats, so an incremental consumer pays for the tail, not the
         log.
         """
-        with open(self._manifest_path(topic, since_version)) as f:
-            base = json.load(f)
+        base = manifest.load(self.root, topic, since_version)
         if version is None:
             version, target = self.latest_manifest(topic)
         else:
-            with open(self._manifest_path(topic, version)) as f:
-                target = json.load(f)
+            target = manifest.load(self.root, topic, version)
         if base.get("restored_from") != target.get("restored_from"):
             raise ValueError(
                 f"topic {topic!r} was restored between versions "
@@ -2455,8 +2350,7 @@ class TopicStore:
         offsets past the restored tail clamp at end-of-log on the next
         consume.
         """
-        with open(self._manifest_path(topic, version)) as f:
-            target = json.load(f)
+        target = manifest.load(self.root, topic, version)
         data = self.data_dir(topic)
         missing = [
             rel
@@ -2498,20 +2392,11 @@ class TopicStore:
         self._floors.pop(topic, None)
         return committed
 
-    # -- util --------------------------------------------------------------
-    @staticmethod
-    def _write_json(path: str, obj: dict) -> None:
-        d = os.path.dirname(path)
-        fd, tmp = tempfile.mkstemp(dir=d)
-        with os.fdopen(fd, "w") as f:
-            json.dump(obj, f)
-        os.replace(tmp, path)
-
     # -- introspection -------------------------------------------------------
     def history(self, topic: str) -> list[dict]:
         """DESCRIBE-HISTORY-style audit of the manifest log: one row per
         committed version with its wall-clock time (the commit file's
-        mtime — the O_EXCL create IS the commit instant) and the
+        mtime — its claim IS the commit instant) and the
         operation KIND, derived by diffing consecutive snapshots rather
         than stored — so history works for every log ever written and
         the commit protocol stays untouched:
@@ -2529,15 +2414,12 @@ class TopicStore:
         (bounded log), so history covers the RETAINED tail; after a
         prune the earliest surviving version reports
         ``retained-snapshot`` (its predecessor diff is gone)."""
-        log = self._log_dir(topic)
         out: list[dict] = []
         prev_files: set[str] = set()
         prev_floors: dict[int, int] = {}
         prev_restore = None
-        for name in sorted(n for n in os.listdir(log) if n.endswith(".json")):
-            path = os.path.join(log, name)
-            with open(path) as f:
-                m = json.load(f)
+        for version in manifest.versions(self.root, topic):
+            m = manifest.load(self.root, topic, version)
             files = set(m["files"])
             floors = {int(k): v for k, v in m.get("floors", {}).items()}
             restore_mark = m.get("restored_from")
@@ -2563,7 +2445,7 @@ class TopicStore:
                 op = "metadata"
             row = {
                 "version": m["version"],
-                "ts": os.path.getmtime(path),
+                "ts": os.path.getmtime(manifest.path(self.root, topic, version)),
                 "operation": op,
                 "n_files": len(files),
                 "files_added": len(added),

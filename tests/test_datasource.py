@@ -753,19 +753,19 @@ def test_partitioned_manifest_parse_cached_per_version(spark, planner_store, mon
     """Steady-state tailing must not re-parse the full manifest every
     trigger: bounds and file lists are cached per committed version,
     and a new commit (version bump) invalidates naturally."""
-    import ripple_server_spark.sources.datasource as dsmod
+    from ripple_server_spark.sources import manifest
 
     r = _planner(planner_store, batch_size=50)
     r.initialOffset()
 
     calls = {"n": 0}
-    real_load = dsmod._load_manifest
+    real_load = manifest.load
 
     def counting_load(root, topic, version):
         calls["n"] += 1
         return real_load(root, topic, version)
 
-    monkeypatch.setattr(dsmod, "_load_manifest", counting_load)
+    monkeypatch.setattr(manifest, "load", counting_load)
     start = r.latestOffset()
     first = calls["n"]
     assert first >= 1

@@ -11,6 +11,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from ripple_server_spark.sources import manifest
 from ripple_server_spark.sources.maintenance import TopicMaintenance
 from ripple_server_spark.sources.topics import (
     StaleGenerationError,
@@ -456,7 +457,7 @@ def test_commit_revalidates_after_write_and_rolls_back(
     st.commit("g-0", "t", 0, 1, group_id="g", generation=gen)
     baseline = st._read_offsets_doc("g-0", "t")
 
-    orig = st._write_json
+    orig = manifest.write_json
     raced = {"done": False}
 
     def rebalance_mid_write(path, obj):
@@ -467,7 +468,7 @@ def test_commit_revalidates_after_write_and_rolls_back(
             st.assign_buckets("t", "g", 3)
         return out
 
-    monkeypatch.setattr(st, "_write_json", rebalance_mid_write)
+    monkeypatch.setattr(manifest, "write_json", rebalance_mid_write)
     with pytest.raises(StaleGenerationError):
         st.commit_many(
             "g-0", "t", {0: 9, 1: 9}, group_id="g", generation=gen
@@ -481,7 +482,7 @@ def test_commit_revalidates_after_write_and_rolls_back(
 def test_legacy_flat_offsets_files_still_read(spark, tmp_path):
     st = TopicStore(spark, str(tmp_path / "legacy"))
     st.create_topic("t", n_buckets=2)
-    st._write_json(st._offsets_path("old", "t"), {"0": 7, "1": 9})
+    manifest.write_json(manifest.offsets_path(st.root, "old", "t"), {"0": 7, "1": 9})
     assert st.committed_offsets("old", "t") == {0: 7, 1: 9}
     # a new-format write upgrades the document without losing entries
     st.commit("old", "t", 1, 11)

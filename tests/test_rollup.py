@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import tempfile
@@ -11,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ripple_server_spark.catalog import load_table
+from ripple_server_spark.sources import manifest
 from ripple_server_spark.sources.rollup import HOUR_FMT, HourlyRollup
 from ripple_server_spark.sources.topics import TopicStore
 from tests.conftest import SF_SMOKE
@@ -163,7 +163,7 @@ def test_refresh_hwm_is_pinned_to_folded_snapshot(spark, sf_dir, tmp_path):
     roll = HourlyRollup(spark, store, "t", str(tmp_path / "roll"))
     real = store.latest_manifest
     store.latest_manifest = lambda topic: (
-        (v1, json.load(open(store._manifest_path(topic, v1))))
+        (v1, manifest.load(store.root, topic, v1))
         if topic == "t"
         else real(topic)
     )
@@ -271,9 +271,9 @@ def test_rollup_read_before_first_fold_is_empty_typed(spark, tmp_path):
 
 
 def test_rollup_state_write_is_atomic(spark, sf_dir, tmp_path):
-    """The state file commits via tmp+rename: no .tmp remnant survives a
+    """The state file commits via tmp+rename: no tmp remnant survives a
     refresh, and a pre-existing stale .tmp (crash artifact) is ignored
-    and replaced rather than corrupting the state."""
+    rather than corrupting the state."""
     import os
 
     from ripple_server_spark.catalog import load_table
@@ -287,7 +287,10 @@ def test_rollup_state_write_is_atomic(spark, sf_dir, tmp_path):
     # plant a crash artifact where the tmp file goes
     with open(ru._state_path() + ".tmp", "w") as f:
         f.write("{corrupt")
+    before = set(os.listdir(ru.dest))
     ru.refresh()
-    assert not os.path.exists(ru._state_path() + ".tmp")
+    # the state write renames its unique tmp over the state file: only
+    # the state and the folded data are new in the rollup dir
+    assert set(os.listdir(ru.dest)) - before == {"_rollup_state.json", "data"}
     hwm, _marker = ru._load_state()
     assert hwm  # committed state is valid JSON with the folded HWMs

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ripple_server_spark.catalog import load_table
+from ripple_server_spark.sources import manifest
 from ripple_server_spark.sources.topics import TopicStore
 
 N_BUCKETS = 4
@@ -408,7 +409,6 @@ def test_restore_past_vacuum_horizon_fails(spark, sf_dir, tmp_path):
     """Restore must refuse when the target version's data files were
     vacuumed (Delta RESTORE-past-VACUUM failure mode) — never commit a
     manifest pointing at deleted files."""
-    import json
     import os
 
     st = TopicStore(spark, str(tmp_path / "rv"))
@@ -420,8 +420,7 @@ def test_restore_past_vacuum_horizon_fails(spark, sf_dir, tmp_path):
 
     # branch 1: target manifest retained but its data files deleted
     # (simulates a vacuum that ran between the two versions)
-    with open(st._manifest_path("v", v_target)) as f:
-        target_files = set(json.load(f)["files"])
+    target_files = set(manifest.load(st.root, "v", v_target)["files"])
     live = set(st._live_files("v"))
     for rel in target_files - live:
         os.remove(os.path.join(st.data_dir("v"), rel))
@@ -430,7 +429,7 @@ def test_restore_past_vacuum_horizon_fails(spark, sf_dir, tmp_path):
 
     # branch 2: the target MANIFEST itself pruned by vacuum
     st.vacuum("v", grace_s=0.0)
-    assert not os.path.exists(st._manifest_path("v", v_target))
+    assert not os.path.exists(manifest.path(st.root, "v", v_target))
     with pytest.raises(FileNotFoundError):
         st.restore("v", v_target)
     # the failed restores committed nothing
